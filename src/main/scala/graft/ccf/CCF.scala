@@ -335,21 +335,18 @@ object CCF {
         n
     }
 
-    // Size-gated engine choice (see class scaladoc of [[MicroFixpoint]]):
-    // sub-threshold graphs run the identical algorithm on the RDD layer,
-    // where a round is one lightweight job with no per-round planning cost.
-    // The armed blowup detector ([[auto]], blowupFactor > 0) runs inside the
-    // micro loop on the same observed row counts, so the auto path gets the
-    // same latency rounds and the same mid-fixpoint hand-off. Not taken for
-    // key types without a typed kernel, or when the session opted into
-    // reliable checkpoints (spark.graft.checkpointDir signals a preemptible
-    // cluster, where the declarative loop's per-round DFS checkpoint is the
-    // point — the micro engine keeps state in executor blocks only).
+    // Size-gated engine choice (see [[MicroFixpoint]]): sub-threshold graphs
+    // run the same kernel on the RDD layer with no per-round planning; the
+    // armed blowup detector ([[auto]]) runs inside that loop on the same
+    // observed row counts. Not taken for key types without a typed kernel, or
+    // when the session opted into reliable checkpoints
+    // (spark.graft.checkpointDir: a preemptible cluster, where the declarative
+    // loop's per-round DFS checkpoint is the point — micro rounds live in
+    // executor blocks only).
     val reliableCkpt = edges.sparkSession.conf
       .getOption(graft.Checkpoints.DirKey).exists(_.nonEmpty)
     if (!reliableCkpt && nInput < MicroFixpoint.Threshold) {
-      val parts = math.max(1, (nInput / 32000L + 1L).toInt)
-      MicroFixpoint.runDF(pairs, variant, maxIterations, parts, blowupFactor, nInput) match {
+      MicroFixpoint.runDF(pairs, maxIterations, blowupFactor, nInput) match {
         case Some(r) => return r
         case None    => () // unsupported key type: declarative path below
       }
@@ -473,8 +470,8 @@ object CCF {
       // sized once from the input would serialize those rounds. This is the
       // latency path's stand-in for AQE (disabled for toy inputs above); with
       // AQE on, its coalescing does the same from runtime stats.
-      val resized = math.max(1L, math.min(origShuffle.toLong, rows / 32000L + 1L))
-      if (resized != spark.conf.get(shuffleKey).toLong)
+      val resized = MicroFixpoint.partitions(rows, origShuffle.toInt)
+      if (resized != spark.conf.get(shuffleKey).toInt)
         spark.conf.set(shuffleKey, resized.toString)
       // CCF-Dedup: already materialized in the checkpoint above (r18).
       pairs = emitted
