@@ -165,12 +165,15 @@ object CCF {
    * ENGINE SELECTION BY SIZE (observe-then-choose, like [[auto]]'s density
    * rule): below [[MicroFixpoint.Threshold]] input pairs (when the kernel
    * supports the key type), the whole fixpoint runs on [[MicroFixpoint]] —
-   * the same algorithm on the RDD layer, where a round costs one lightweight
-   * job with zero per-round Catalyst planning. Measured on the reference's
-   * 34-run matrix, per-round planning + exchange setup for the declarative
-   * path is ~150 ms while the data is <100k rows — two orders of magnitude
-   * over the compute. At scale the declarative path below wins (codegen,
-   * AQE skew handling, partial aggregation) and is the engine of record.
+   * the same algorithm on the RDD layer with zero per-round Catalyst
+   * planning. Rounds whose input is under the same threshold run back to
+   * back inside one task, with no per-round job or shuffle; a round that
+   * emits more is shuffled over reducers sized from its observed row count.
+   * Measured on the reference's 34-run matrix, per-round planning + exchange
+   * setup for the declarative path is ~150 ms while the data is <100k rows —
+   * two orders of magnitude over the compute. At scale the declarative path
+   * below wins (codegen, AQE skew handling, partial aggregation) and is the
+   * engine of record.
    *
    * Declarative path: per round, ONE Spark job — the round's tagged emits
    * are eagerly `localCheckpoint`'ed (truncating lineage), and the NewPair

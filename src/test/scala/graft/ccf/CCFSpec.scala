@@ -163,12 +163,14 @@ class CCFSpec extends SparkSpec {
       "cluster5x20" -> Generators.clusterGraph(5, 20, interEdges = 4))
     def keyed(df: DataFrame, t: String) =
       df.select(col("src").cast(t).as("src"), col("dst").cast(t).as("dst"))
+    // chain500/string peaks at 107,620 emitted rows (round 9): rounds 1-9 run
+    // in the task, round 10 is shuffled, rounds 11-12 run in the task again
     val graphs = ("fig5/string" -> edges(fig5: _*)) +:
       generated.flatMap { case (name, g) =>
         val df = Generators.toDF(spark, g)
         Seq(s"$name/string" -> df, s"$name/long" -> keyed(df, "long"),
           s"$name/int" -> keyed(df, "int"))
-      }
+      } :+ ("chain500/string" -> Generators.toDF(spark, Generators.chainGraph(500)))
     def declarative[T](body: => T): T = {
       val dir = java.nio.file.Files.createTempDirectory("graft-ckpt").toString
       spark.conf.set(graft.Checkpoints.DirKey, dir)
@@ -185,6 +187,35 @@ class CCFSpec extends SparkSpec {
       val declCapped = declarative(CCF.run(df, variant, maxIterations = 2))
       assert(microCapped.assignments.collect().toSet ===
         declCapped.assignments.collect().toSet, s"$what capped")
+      assert(microCapped.iterations === declCapped.iterations, s"$what capped")
+      assert(microCapped.newPairsHistory === declCapped.newPairsHistory, s"$what capped")
+    }
+  }
+
+  test("micro engine: in-task rounds stop where the blowup detector fires and at the budget") {
+    val chain = Generators.chainGraph(500)
+    def micro(maxIterations: Int, parts0: Int, blowupFactor: Long) =
+      MicroFixpoint.run(spark.sparkContext.parallelize(chain, 2), maxIterations, parts0,
+        blowupFactor, nInput = 499L)
+    // every round of chain(500) emits more than 499 rows: round 2 is the
+    // detector's second consecutive blowup
+    val sw = micro(100, 1, blowupFactor = 1L)
+    assert(sw.switched)
+    assert(sw.iterations === 2)
+    assert(sw.history.length === 2)
+    val capped = micro(1, 1, blowupFactor = 0L)
+    assert(capped.iterations === 1)
+    assert(!capped.switched)
+    assert(!capped.converged)
+    // round 1 shuffled over 4 reducers instead of run in the task
+    for (blowupFactor <- Seq(0L, 1L)) {
+      val inTask = micro(100, 1, blowupFactor)
+      val shuffled = micro(100, 4, blowupFactor)
+      assert(shuffled.iterations === inTask.iterations, s"blowupFactor $blowupFactor")
+      assert(shuffled.history === inTask.history, s"blowupFactor $blowupFactor")
+      assert(shuffled.switched === inTask.switched, s"blowupFactor $blowupFactor")
+      assert(shuffled.assignments.collect().toSet === inTask.assignments.collect().toSet,
+        s"blowupFactor $blowupFactor")
     }
   }
 

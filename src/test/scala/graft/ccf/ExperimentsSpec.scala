@@ -2,13 +2,34 @@ package graft.ccf
 
 import graft.SparkSpec
 
-/** Reference-parity of the experiment harness: iteration counts on the
-  * deterministic chain family must equal the reference CSV row for row
-  * (BASELINE.md experiment 2, experiment_results_scala.csv:14-23); structural
-  * invariants must hold for the seeded families. Chain n=200/500 run in the
-  * harness itself (Experiments.runAll) but are too slow for every test run —
-  * n<=100 here mirrors CCFSpec's coverage with the harness code path. */
+/** Reference-parity of the experiment harness: the full 34-run matrix
+  * (Experiments.runAll) must reproduce the reference Scala column of
+  * BASELINE.md — iterations and components, both variants, row for row; the
+  * chain family also through CCF.run directly, and structural invariants must
+  * hold for the seeded families. */
 class ExperimentsSpec extends SparkSpec {
+
+  test("the full 34-run matrix matches BASELINE.md's Scala iterations and components") {
+    // (experiment, nodes, inter-edges) -> (iterations, components), the same
+    // for both variants: BASELINE.md experiments 1-3, Scala column
+    val reference = Map(
+      ("random", 50, 0) -> (5, 1), ("random", 100, 0) -> (5, 1),
+      ("random", 500, 0) -> (5, 1), ("random", 1000, 0) -> (5, 1),
+      ("random", 2000, 0) -> (6, 1), ("random", 5000, 0) -> (6, 1),
+      ("chain", 10, 0) -> (6, 1), ("chain", 50, 0) -> (8, 1), ("chain", 100, 0) -> (9, 1),
+      ("chain", 200, 0) -> (10, 1), ("chain", 500, 0) -> (12, 1),
+      ("cluster", 100, 0) -> (6, 5), ("cluster", 100, 4) -> (8, 1),
+      ("cluster", 500, 0) -> (7, 10), ("cluster", 500, 9) -> (9, 3),
+      ("cluster", 1000, 0) -> (7, 20), ("cluster", 1000, 19) -> (10, 4))
+    val rs = Experiments.runAll(spark)
+    assert(rs.size === 34)
+    assert(rs.map(r => (r.experiment, r.nodes, r.interEdges, r.algorithm)).distinct.size === 34)
+    for (r <- rs) {
+      val what = s"${r.experiment} n=${r.nodes} inter=${r.interEdges} ${r.algorithm}"
+      val (iterations, components) = reference((r.experiment, r.nodes, r.interEdges))
+      assert((r.iterations, r.components) === ((iterations, components.toLong)), what)
+    }
+  }
 
   test("chain iteration counts match the reference CSV via the harness path") {
     val expected = Map(10 -> 6, 50 -> 8, 100 -> 9)
