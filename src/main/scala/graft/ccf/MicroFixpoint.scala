@@ -52,10 +52,11 @@ import scala.reflect.ClassTag
  * `SizeTrackingAppendOnlyMap` — memory accounting, not CCF work. A block is
  * sized once per partition, and no size-tracked map is left.
  *
- * Memory bound: an in-task round reads < [[Threshold]] rows, so it holds
- * < 2 x [[Threshold]] bidirected rows in flat columns, the grouped row array
- * and the sort index, plus its emitted block (at most as many rows as it
- * bidirected). A shuffled round's reducer holds the same for its partition;
+ * Memory bound: an in-task round reads < [[Threshold]] rows (round 1 reads
+ * the input, which [[CCF.run]] sends here only under [[Threshold]]), so it
+ * holds < 2 x [[Threshold]] bidirected rows in flat columns, the grouped row
+ * array and the sort index, plus its emitted block (at most as many rows as
+ * it bidirected). A shuffled round's reducer holds the same for its partition;
  * [[partitions]] gives one per 32k input rows (~64k bidirected) up to
  * `maxParts`, and only a blowup past `maxParts x 32k` rows, which
  * [[CCF.auto]]'s detector stops after two rounds, grows a partition beyond
